@@ -17,15 +17,15 @@ to rows at or after the resume point:
 - under skip_past_last, also past the last emitted match's end (those
   rows are consumed by definition of the skip strategy).
 
-State = an Arrow-IPC row buffer plus per-key (next match id, resume
-timestamp) cursors — O(rows within the watermark+within horizon), the
-same bound as Flink's NFA state.  The buffer is typed columnar (no
-pickle), kept sorted with one stable pandas sort per batch, and resume
-trims are searchsorted on the time column; rows materialize as dicts
-only for the NFA scan itself (the matcher is per-row by nature — it IS
-the NFA).  With ``key_buckets`` the stateful shuffle rides on Flink-
-style key groups (hash(key) % B) and one invocation serves all of a
-bucket's keys.
+State (``streaming.keyed_state``) = a row buffer plus per-key (next
+match id, resume timestamp) cursors, both Arrow frames — O(rows within
+the watermark+within horizon), the same bound as Flink's NFA state.
+The buffer is kept sorted with one stable pandas sort per batch, and
+resume trims are searchsorted on the time column; rows materialize as
+dicts only for the NFA scan itself (the matcher is per-row by nature —
+it IS the NFA).  With ``key_buckets`` the stateful shuffle rides on
+``keyed_state.key_groups`` and one invocation serves all of a bucket's
+keys.
 """
 
 from __future__ import annotations
@@ -35,12 +35,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from flink_1_8_sourcecode_spark.cep.matcher import _find_matches
 from flink_1_8_sourcecode_spark.cep.pattern import Pattern
-from flink_1_8_sourcecode_spark.streaming import arrow_state
+from flink_1_8_sourcecode_spark.streaming import keyed_state
 
 
 def match_pattern_stream(
@@ -132,27 +131,23 @@ def match_pattern_stream(
     # the full input row must survive buffering: DEFINE/where predicates
     # may reference any column, not just the selected ones
     buf_cols = ["__t", *stream.columns]
-
     meta_cols = [key, "__next_id", "__resume"]
+    empty = (
+        keyed_state.frame(src.schema, buf_cols, __t="float64"),
+        keyed_state.frame(src.schema, meta_cols, __next_id="int64", __resume="float64"),
+    )
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        # buf = typed row frame with a __t seconds column, kept sorted by
+        # buf = row frame with a __t seconds column, kept sorted by
         # (key, __t, tiebreak); per-key (next_id, resume) cursors live in
-        # an Arrow meta frame — state rides as Arrow IPC, never pickle
-        if state.exists:
-            buf_blob, meta_blob = state.get
-            parts = [arrow_state.de(bytes(buf_blob), buf_cols)]
-            meta = arrow_state.de(bytes(meta_blob), meta_cols)
-        else:
-            parts, meta = [], pd.DataFrame(columns=meta_cols)
+        # the meta frame
+        buf, meta = keyed_state.load(state, empty)
+        parts = [buf]
         for pdf in batches:
             p = pdf[buf_cols[1:]].copy()
-            p.insert(
-                0, "__t",
-                pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6,
-            )
+            p.insert(0, "__t", keyed_state.event_us(pdf[time_col]) / 1e6)
             parts.append(p)
-        buf = arrow_state.concat(parts, buf_cols)
+        buf = keyed_state.concat(parts, buf_cols)
 
         wm_ms = state.getCurrentWatermarkMs()
         stable_limit = wm_ms / 1000.0 - within
@@ -232,7 +227,7 @@ def match_pattern_stream(
                     kept.append(grp)
                 cur[0], cur[1] = next_id, resume
 
-        buf = arrow_state.concat(kept, buf_cols)
+        buf = keyed_state.concat(kept, buf_cols)
         meta = pd.DataFrame(
             {
                 key: list(cursors),
@@ -241,31 +236,14 @@ def match_pattern_stream(
             },
             columns=meta_cols,
         )
-        state.update((
-            arrow_state.ser(buf.reset_index(drop=True)),
-            arrow_state.ser(meta),
-        ))
-        if len(buf):
-            # Event-time timer at the earliest buffered row + within: the
-            # bucket re-fires when its oldest pending start stabilizes even
-            # if no further events arrive (Flink's CEP cleanup timer parity).
-            earliest = float(buf["__t"].min())
-            state.setTimeoutTimestamp(
-                max(int((earliest + within) * 1000) + 1, wm_ms + 1)
-            )
+        # Event-time timer at the earliest buffered row + within: the
+        # bucket re-fires when its oldest pending start stabilizes even
+        # if no further events arrive (Flink's CEP cleanup timer parity).
+        wake_ms = int((float(buf["__t"].min()) + within) * 1000) + 1 if len(buf) else None
+        keyed_state.save(state, (buf, meta), wake_ms)
         if out_rows:
             yield pd.DataFrame(out_rows, columns=out_cols)
 
-    if key_buckets is not None:
-        grouped = src.withColumn(
-            "__kg", F.pmod(F.xxhash64(F.col(key)), F.lit(key_buckets))
-        ).groupBy("__kg")
-    else:
-        grouped = src.groupBy(key)
-    return grouped.applyInPandasWithState(
-        fn,
-        out_schema,
-        "buf binary, meta binary",
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state.apply(
+        src, [key], fn, out_schema, "buf binary, meta binary", key_buckets
     )

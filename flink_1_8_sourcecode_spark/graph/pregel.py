@@ -71,23 +71,3 @@ def scatter_gather_iteration(
     out = iterate(vertices, step, max_iterations)
     edges.unpersist()
     return out
-
-
-def gather_sum_apply(
-    vertices: DataFrame,
-    edges: DataFrame,
-    gather: Callable[[DataFrame, int], Mapping[str, Column]],
-    sum_fn: Callable[[int], Mapping[str, Column]],
-    apply_fn: Callable[[DataFrame, int], list[Column]],
-    max_iterations: int,
-) -> DataFrame:
-    """Gather-Sum-Apply iteration (flink-gelly/.../gsa/
-    GatherSumApplyIteration.java) — the same dataflow as scatter-gather
-    with GSA's naming: ``gather`` computes one partial value per edge
-    (from the source vertex's state + edge attrs), ``sum_fn`` combines
-    partials per target vertex, ``apply_fn`` updates the vertex from
-    the combined value.  Delegates to scatter_gather_iteration, which
-    already runs exactly this join + aggregate round."""
-    return scatter_gather_iteration(
-        vertices, edges, gather, sum_fn, apply_fn, max_iterations
-    )

@@ -47,26 +47,6 @@ def exact_dedup(df: DataFrame, keys: list[str], keep_by: str) -> DataFrame:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_k: int = 3) -> Column:
-    """MinHash signature as an array of hex-digest minima.
-
-    Hash family i = md5(i || '|' || shingle); min is lexicographic over
-    the hex strings — engine-portable (md5 is identical everywhere) and
-    a valid min-wise family.
-    """
-    sh = shingles(text, shingle_k)
-
-    # NB: capture the seed via a closure factory — a `lambda s, i=i:` default
-    # arg would make PySpark treat the HOF lambda as two-parameter and bind
-    # the second parameter to the array index Column.
-    def seeded(i: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, seeded(i))) for i in range(num_hashes)]
-    )
-
-
 def minhash_band_rows(
     df: DataFrame,
     id_col: str,

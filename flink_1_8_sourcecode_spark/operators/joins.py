@@ -644,9 +644,9 @@ def _outer_unbounded_join(
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
-    from flink_1_8_sourcecode_spark.streaming import arrow_state
+    from flink_1_8_sourcecode_spark.streaming import keyed_state
 
     lcols = [c for c in left.columns if c not in keys]
     rcols = [c for c in right.columns if c not in keys]
@@ -681,13 +681,13 @@ def _outer_unbounded_join(
             *[F.lit(None).cast(t).alias(c) for c, t in other],
         ).withWatermark("__ts", watermark_delay)
 
-    u = (
-        _tag(left, left_time, 0)
-        .unionByName(_tag(right, right_time, 1))
-        .withColumn("__kg", F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(key_buckets)))
+    u = _tag(left, left_time, 0).unionByName(_tag(right, right_time, 1))
+    empty = (
+        keyed_state.frame(u.schema, lbuf_cols),
+        keyed_state.frame(u.schema, rbuf_cols),
+        keyed_state.frame(u.schema, meta_cols, __deadline="int64"),
     )
-
-    _concat = arrow_state.concat
+    _concat = keyed_state.concat
     ttl_ms = int(idle_state_ttl_seconds * 1000)
 
     def _finish(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -709,15 +709,7 @@ def _outer_unbounded_join(
         return df.merge(key_df, on=keys)
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            lbuf, rbuf, mbuf = state.get
-            old_l = arrow_state.de(bytes(lbuf), lbuf_cols)
-            old_r = arrow_state.de(bytes(rbuf), rbuf_cols)
-            meta = arrow_state.de(bytes(mbuf), meta_cols)
-        else:
-            old_l = pd.DataFrame(columns=lbuf_cols)
-            old_r = pd.DataFrame(columns=rbuf_cols)
-            meta = pd.DataFrame(columns=meta_cols)
+        old_l, old_r, meta = keyed_state.load(state, empty)
         wm = state.getCurrentWatermarkMs()
 
         new_l_parts: list[pd.DataFrame] = []
@@ -726,7 +718,7 @@ def _outer_unbounded_join(
         for pdf in batches:
             if not len(pdf):
                 continue
-            ts_ms = pdf["__ts"].astype("datetime64[us]").astype("int64") // 1000
+            ts_ms = keyed_state.event_us(pdf["__ts"]) // 1000
             ts_parts.append(pdf[keys].assign(__t=ts_ms))
             new_l_parts.append(pdf.loc[pdf["__side"] == 0, lbuf_cols])
             new_r_parts.append(pdf.loc[pdf["__side"] == 1, rbuf_cols])
@@ -778,24 +770,15 @@ def _outer_unbounded_join(
                             pad[c] = None
                         out = _concat([out, pad], out_cols)
 
-        if len(meta):
-            state.update((
-                arrow_state.ser(all_l.reset_index(drop=True)),
-                arrow_state.ser(all_r.reset_index(drop=True)),
-                arrow_state.ser(meta.reset_index(drop=True)),
-            ))
-            state.setTimeoutTimestamp(
-                max(int(meta["__deadline"].astype("int64").min()), wm + 1)
-            )
-        elif state.exists:
-            state.remove()
+        # every buffered key has a deadline, so no meta means no state
+        wake_ms = int(meta["__deadline"].astype("int64").min()) if len(meta) else None
+        keyed_state.save(state, (all_l, all_r, meta), wake_ms)
 
         if len(out):
             yield _finish(out)
 
-    return u.groupBy("__kg").applyInPandasWithState(
-        fn, out_schema, "lbuf binary, rbuf binary, meta binary", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state.apply(
+        u, keys, fn, out_schema, "lbuf binary, rbuf binary, meta binary", key_buckets
     )
 
 
@@ -848,9 +831,9 @@ def temporal_join_stream(
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
-    from flink_1_8_sourcecode_spark.streaming import arrow_state
+    from flink_1_8_sourcecode_spark.streaming import keyed_state
 
     if how not in ("inner", "left"):
         raise ValueError(f"how must be inner/left, got {how!r}")
@@ -886,15 +869,12 @@ def temporal_join_stream(
             *[F.lit(None).cast(t).alias(c) for c, t in other],
         ).withWatermark("__ts", watermark_delay)
 
-    u = (
-        _tag(probe, probe_time, 0)
-        .unionByName(_tag(versioned, version_time, 1))
-        .withColumn(
-            "__kg", F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(key_buckets))
-        )
+    u = _tag(probe, probe_time, 0).unionByName(_tag(versioned, version_time, 1))
+    empty = (
+        keyed_state.frame(u.schema, pbuf_cols, __t="datetime64[ns]"),
+        keyed_state.frame(u.schema, vbuf_cols, __t="datetime64[ns]"),
     )
-
-    _concat = arrow_state.concat
+    _concat = keyed_state.concat
     ttl_ms = (
         None if version_ttl_seconds is None else int(version_ttl_seconds * 1000)
     )
@@ -905,13 +885,7 @@ def temporal_join_stream(
         return pdf.reindex(columns=out_cols)
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            pb, vb = state.get
-            pend = arrow_state.de(bytes(pb), pbuf_cols)
-            vers = arrow_state.de(bytes(vb), vbuf_cols)
-        else:
-            pend = pd.DataFrame(columns=pbuf_cols)
-            vers = pd.DataFrame(columns=vbuf_cols)
+        pend, vers = keyed_state.load(state, empty)
         wm = state.getCurrentWatermarkMs()
 
         new_p: list[pd.DataFrame] = []
@@ -919,9 +893,8 @@ def temporal_join_stream(
         for pdf in batches:
             if not len(pdf):
                 continue
-            pdf = pdf.assign(
-                __t=pdf["__ts"].astype("datetime64[us]").astype("int64") // 1000
-            )
+            # __t: event time at the watermark's millisecond grain
+            pdf = pdf.assign(__t=pdf["__ts"].dt.floor("ms"))
             new_p.append(pdf.loc[pdf["__side"] == 0, pbuf_cols])
             new_v.append(pdf.loc[pdf["__side"] == 1, vbuf_cols])
         pend = _concat([pend] + new_p, pbuf_cols)
@@ -929,11 +902,9 @@ def temporal_join_stream(
 
         # probes whose event time the watermark has passed are FINAL:
         # any version at-or-before them has already arrived
-        ready = pend[pend["__t"].astype("int64") <= wm]
-        pend = pend[pend["__t"].astype("int64") > wm]
+        ready, pend = keyed_state.split_at_watermark(pend, ["__t"], "__t", wm)
         out = None
         if len(ready):
-            ready = ready.sort_values("__t", kind="mergesort")
             if len(vers):
                 # sort by (time, payload): merge_asof takes the LAST row
                 # <= the probe time, giving the greatest-payload tie rule
@@ -971,41 +942,31 @@ def temporal_join_stream(
         # and clears (idle-state-retention semantics)
         if len(vers):
             vv = vers.sort_values(["__t"] + right_cols, kind="mergesort")
-            below = vv[vv["__t"].astype("int64") <= wm]
+            vt_ms = keyed_state.event_us(vv["__t"]) // 1000
+            below = vv[vt_ms <= wm]
             if len(below):
                 below = below.groupby(keys, as_index=False).tail(1)
                 if ttl_ms is not None:
-                    below = below[below["__t"].astype("int64") > wm - ttl_ms]
-            vers = _concat(
-                [below, vv[vv["__t"].astype("int64") > wm]], vbuf_cols
-            )
+                    below = below[keyed_state.event_us(below["__t"]) // 1000 > wm - ttl_ms]
+            vers = _concat([below, vv[vt_ms > wm]], vbuf_cols)
 
-        if len(pend) or len(vers):
-            state.update((
-                arrow_state.ser(pend.reset_index(drop=True)),
-                arrow_state.ser(vers.reset_index(drop=True)),
-            ))
-            if len(pend):
-                # wake exactly when the earliest pending probe stabilizes
-                state.setTimeoutTimestamp(
-                    max(int(pend["__t"].astype("int64").min()), wm + 1)
-                )
-            elif ttl_ms is not None and len(vers):
-                # no probes pending: wake when the oldest retained
-                # version's TTL expires so dead-key state clears even
-                # if the bucket never sees data again
-                state.setTimeoutTimestamp(
-                    max(int(vers["__t"].astype("int64").min()) + ttl_ms, wm + 1)
-                )
-        elif state.exists:
-            state.remove()
+        if len(pend):
+            # wake exactly when the earliest pending probe stabilizes
+            wake_ms = keyed_state.event_us(pend["__t"]).min() // 1000
+        elif ttl_ms is not None and len(vers):
+            # no probes pending: wake when the oldest retained version's
+            # TTL expires so dead-key state clears even if the bucket
+            # never sees data again
+            wake_ms = keyed_state.event_us(vers["__t"]).min() // 1000 + ttl_ms
+        else:
+            wake_ms = None
+        keyed_state.save(state, (pend, vers), wake_ms)
 
         if out is not None and len(out):
             yield _finish(out)
 
-    return u.groupBy("__kg").applyInPandasWithState(
-        fn, out_schema, "pbuf binary, vbuf binary", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state.apply(
+        u, keys, fn, out_schema, "pbuf binary, vbuf binary", key_buckets
     )
 
 

@@ -14,10 +14,10 @@ window — evict-before-apply, the reference default (``doEvictAfter=false``).
 
 Scale notes: ``key_buckets`` shards keys into Flink-style key groups
 (KeyGroupRangeAssignment.java — see ``triggers.py`` module docstring);
-the element buffer rides as a packed float64 matrix (typed, no pickle;
-see ``arrow_state.pack_f64``); eviction is vectorized numpy — a lexsort
-per bucket-batch plus boolean masks, no per-element Python.  The
-user-supplied ``delta_fn`` is tried on whole numpy arrays first and
+the element buffer rides as a ``keyed_state.Packed`` matrix (exact
+int64 key, float64 window/time/value); eviction is vectorized numpy —
+a lexsort per bucket-batch plus boolean masks, no per-element Python.
+The user-supplied ``delta_fn`` is tried on whole numpy arrays first and
 falls back to per-element calls only if it is not vectorizable.
 """
 
@@ -28,11 +28,10 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-from flink_1_8_sourcecode_spark.streaming import arrow_state
+from flink_1_8_sourcecode_spark.streaming import keyed_state
 
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
@@ -81,9 +80,8 @@ def evicted_tumble_agg(
         delta_fn = lambda e, last: abs(e - last)  # noqa: E731
     key_field = df.schema[key]
     key_name, key_ddl = key_field.name, key_field.dataType.simpleString()
-    numeric_key = isinstance(key_field.dataType, _INTEGRAL)
     bucketed = key_buckets is not None
-    if bucketed and not numeric_key:
+    if bucketed and not isinstance(key_field.dataType, _INTEGRAL):
         raise ValueError(
             f"key_buckets requires an integral key column; {key_name} is {key_ddl}"
         )
@@ -101,79 +99,74 @@ def evicted_tumble_agg(
         return np.array([delta_fn(float(x), last_v) < param for x in varr], dtype=bool)
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        # element buffer rides as a packed (n, 4) float64 matrix of
-        # (u, ws, t, v); u is the key value (0.0 when the invocation is
-        # already per-key and the key is non-numeric)
-        parts = [arrow_state.unpack_f64(state.get[0], 4)] if state.exists else []
+        # element buffer: int64 key u (0 when the invocation is already
+        # per key) plus a float64 (ws, t, v) matrix
+        (st,) = keyed_state.load(state, (keyed_state.packed(3),))
+        u_parts, parts = [st.keys], [st.vals]
         wm = state.getCurrentWatermarkMs() / 1000.0
 
         for pdf in batches:
-            t = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
+            t = keyed_state.event_us(pdf[time_col]) / 1e6
             v = pdf[value_col].astype(float).to_numpy()
-            if numeric_key:
-                u = pdf[key_name].to_numpy().astype(np.float64)
+            if bucketed:
+                u = pdf[key_name].to_numpy().astype(np.int64)
             else:
-                u = np.zeros(len(pdf))
+                u = np.zeros(len(pdf), dtype=np.int64)
             ws = t - np.mod(t, window_seconds)
             live = ws + window_seconds > wm  # behind-watermark: window already fired
             if live.any():
-                parts.append(np.column_stack((u[live], ws[live], t[live], v[live])))
+                u_parts.append(u[live])
+                parts.append(np.column_stack((ws[live], t[live], v[live])))
 
-        buf = np.vstack(parts) if parts else np.empty((0, 4))
+        us, buf = np.concatenate(u_parts), np.vstack(parts)
 
-        def group_bounds(keys2: np.ndarray):
+        def group_bounds(u: np.ndarray, ws: np.ndarray):
             """Start/end indices of each (u, ws) run (buf sorted)."""
-            change = np.concatenate(
-                ([True], (keys2[1:, 0] != keys2[:-1, 0]) | (keys2[1:, 1] != keys2[:-1, 1]))
-            )
+            change = np.concatenate(([True], (u[1:] != u[:-1]) | (ws[1:] != ws[:-1])))
             starts = np.flatnonzero(change)
-            ends = np.concatenate((starts[1:], [len(keys2)]))
+            ends = np.concatenate((starts[1:], [len(u)]))
             return starts, ends
 
         if len(buf):
             # key-major, event-time order (value tiebreak) within each
             # window — the order the reference's TimestampedValue buffer
             # is consumed in
-            buf = buf[np.lexsort((buf[:, 3], buf[:, 2], buf[:, 1], buf[:, 0]))]
+            order = np.lexsort((buf[:, 2], buf[:, 1], buf[:, 0], us))
+            us, buf = us[order], buf[order]
             if kind != "delta":
                 # eager suffix-keeping eviction keeps state bounded; delta
                 # buffers everything until firing (needs the last element)
-                starts, ends = group_bounds(buf[:, :2])
+                starts, ends = group_bounds(us, buf[:, 0])
                 grp_end = np.repeat(ends, ends - starts)
                 if kind == "count":
                     # keep the last n per window
                     keep = grp_end - np.arange(len(buf)) <= int(param)
                 else:
                     # keep one span behind each window's max timestamp
-                    keep = buf[:, 2] > buf[grp_end - 1, 2] - param
-                buf = buf[keep]
+                    keep = buf[:, 1] > buf[grp_end - 1, 1] - param
+                us, buf = us[keep], buf[keep]
 
-        out_rows: list[tuple[float, float, int, float]] = []
+        out_rows: list[tuple[int, float, int, float]] = []
         if len(buf):
-            closing = buf[:, 1] + window_seconds <= wm
-            fired, buf = buf[closing], buf[~closing]
+            closing = buf[:, 0] + window_seconds <= wm
+            fired_u, fired = us[closing], buf[closing]
+            us, buf = us[~closing], buf[~closing]
             if len(fired):
-                starts, ends = group_bounds(fired[:, :2])
+                starts, ends = group_bounds(fired_u, fired[:, 0])
                 for s, e in zip(starts, ends):
-                    varr = fired[s:e, 3]
+                    varr = fired[s:e, 2]
                     if kind == "delta":
                         varr = varr[delta_keep_mask(varr, float(varr[-1]))]
                     out_rows.append(
-                        (float(fired[s, 0]), float(fired[s, 1]), len(varr), float(varr.sum()))
+                        (int(fired_u[s]), float(fired[s, 0]), len(varr), float(varr.sum()))
                     )
 
-        if len(buf):
-            state.update((arrow_state.pack_f64(buf),))
-            target_ms = int((buf[:, 1].min() + window_seconds) * 1000)
-            state.setTimeoutTimestamp(max(target_ms, int(wm * 1000) + 1))
-        elif state.exists:
-            # no open windows: drop the key's state entry entirely so
-            # state stays bounded by ACTIVE keys, not all keys ever seen
-            state.remove()
+        wake_ms = int((buf[:, 0].min() + window_seconds) * 1000) if len(buf) else None
+        keyed_state.save(state, (keyed_state.Packed(us, buf),), wake_ms)
         if out_rows:
             u_arr, ws_arr, cnt_arr, tot_arr = zip(*out_rows)
             if bucketed:
-                key_col = np.array(u_arr).astype(np.int64)
+                key_col = np.array(u_arr, dtype=np.int64)
             else:
                 key_col = key_tuple[0]  # invocation is per key
             yield pd.DataFrame(
@@ -185,13 +178,7 @@ def evicted_tumble_agg(
                 }
             )
 
-    src = df.withWatermark(time_col, watermark_delay)
-    if bucketed:
-        grouped = src.withColumn(
-            "__kg", F.pmod(F.xxhash64(F.col(key)), F.lit(key_buckets))
-        ).groupBy("__kg")
-    else:
-        grouped = src.groupBy(key)
-    return grouped.applyInPandasWithState(
-        fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
+    return keyed_state.apply(
+        df.withWatermark(time_col, watermark_delay), [key], fn, out_schema,
+        "buf binary", key_buckets,
     )

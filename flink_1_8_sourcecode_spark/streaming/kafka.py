@@ -115,18 +115,6 @@ def decode_json_value(df: DataFrame, value_schema: str, ts_from: str = "timestam
     ).select("key", "v.*", "topic", "partition", "offset", "event_time")
 
 
-def encode_json_value(
-    df: DataFrame, key: Column | str, value_cols: list[str]
-) -> DataFrame:
-    """Producer-side serde: (key, value) binary pair from typed columns,
-    the shape Spark's kafka sink expects."""
-    k = F.col(key) if isinstance(key, str) else key
-    return df.select(
-        k.cast("string").cast("binary").alias("key"),
-        F.to_json(F.struct(*[F.col(c) for c in value_cols])).cast("binary").alias("value"),
-    )
-
-
 def fake_kafka_records(
     df: DataFrame,
     topic: str,

@@ -161,16 +161,3 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
 def socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
     """socketTextStream analogue (StreamExecutionEnvironment.java:1190)."""
     return spark.readStream.format("socket").option("host", host).option("port", port).load()
-
-
-def kafka_stream(spark: SparkSession, bootstrap: str, topic: str, **options) -> DataFrame:
-    """FlinkKafkaConsumer analogue — offsets/exactly-once come from Spark's
-    checkpointed kafka source (FlinkKafkaConsumerBase.java:86 parity)."""
-    r = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-    )
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load()

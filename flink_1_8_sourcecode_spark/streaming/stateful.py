@@ -10,13 +10,13 @@ Reference parity:
   no SQL/Table form) -> ``count_window_agg``: per-key element counter in
   state, emits one row per full window of N elements.
 
-Scale notes: state is per-key and partitioned by the groupBy key — the
-same sharding as Flink's keyed state backend; Arrow batches move groups
-into pandas.  State stays small (counters/ring buffers), never whole
-groups, and buffers ride as Arrow-IPC blobs (typed, no pickle); all
-per-batch work is vectorized (stable sorts, boolean watermark splits,
-carry+cumsum running aggregates, shared ``triggers._scan_group`` firing
-math) — no per-row Python in any of these operators.
+State: every operator here runs on ``keyed_state`` — the state
+encoding, the watermark split, event-time timers and key-group sharding
+(per groupBy key, or hashed key groups) live there.  State stays small
+(counters/ring buffers), never whole groups; all per-batch work is
+vectorized (stable sorts, watermark splits, carry+cumsum running
+aggregates, shared ``triggers._scan_group`` firing math) — no per-row
+Python in any of these operators.
 """
 
 from __future__ import annotations
@@ -27,7 +27,9 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from flink_1_8_sourcecode_spark.streaming import keyed_state
 
 
 def keyed_process(
@@ -41,13 +43,8 @@ def keyed_process(
     """ProcessFunction-grade escape hatch: user func sees (key, batches,
     state) exactly like applyInPandasWithState, with Flink-style timeout
     names ('NoTimeout' | 'ProcessingTimeTimeout' | 'EventTimeTimeout')."""
-    tmo = {
-        "NoTimeout": GroupStateTimeout.NoTimeout,
-        "ProcessingTimeTimeout": GroupStateTimeout.ProcessingTimeTimeout,
-        "EventTimeTimeout": GroupStateTimeout.EventTimeTimeout,
-    }[timeout]
-    return df.groupBy(*keys).applyInPandasWithState(
-        func, output_schema, state_schema, "update", tmo
+    return keyed_state.apply(
+        df, keys, func, output_schema, state_schema, mode="update", timeout=timeout
     )
 
 
@@ -69,14 +66,11 @@ def event_time_running_agg(
     the reference's over-window state cleanup).  Emits append-mode rows
     (key, time, tiebreak?, value, running_sum, running_cnt).
 
-    Scale notes: the pending buffer rides as an Arrow-IPC blob (typed,
-    no pickle); per batch the work is one stable sort + boolean split +
-    cumsum — the running sums fall out of ``carry + cumsum`` with no
-    per-row Python.
+    Per batch the work is one stable sort + watermark split + cumsum —
+    the running sums fall out of ``carry + cumsum`` with no per-row
+    Python.
     """
     import numpy as np
-
-    from flink_1_8_sourcecode_spark.streaming import arrow_state
 
     src = df.withWatermark(time_col, watermark_delay)
     key_t = src.schema[key].dataType.simpleString()
@@ -87,63 +81,41 @@ def event_time_running_agg(
         f"{value_col} double, running_sum double, running_cnt long"
     )
     buf_cols = [time_col, *tb, value_col]
+    empty = (keyed_state.frame(src.schema, buf_cols), 0.0, 0)
 
     def fn(key_tuple, batches, state: GroupState):
-        if state.exists:
-            blob, total, cnt = state.get
-            parts = [arrow_state.de(bytes(blob), buf_cols)]
-        else:
-            parts, total, cnt = [], 0.0, 0
-        parts += [pdf[buf_cols] for pdf in batches]
-        pend = arrow_state.concat(parts, buf_cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
-
-        keep = pend
-        if len(pend):
-            pend = pend.sort_values([time_col, *tb], kind="stable", ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-            )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
-            if len(ready):
-                vals = ready[value_col].astype(float).to_numpy()
-                cs = np.cumsum(vals)
-                out = pd.DataFrame(
-                    {
-                        key: key_tuple[0],
-                        time_col: ready[time_col].to_numpy(),
-                        **{t: ready[t].to_numpy() for t in tb},
-                        value_col: vals,
-                        "running_sum": total + cs,
-                        "running_cnt": cnt + np.arange(1, len(vals) + 1, dtype="int64"),
-                    }
-                )
-                total += float(cs[-1])
-                cnt += len(vals)
-            else:
-                out = None
-        else:
-            out = None
-
-        state.update(
-            (arrow_state.ser(keep.reset_index(drop=True)), float(total), int(cnt))
+        buf, total, cnt = keyed_state.load(state, empty)
+        pend = keyed_state.concat([buf, *(pdf[buf_cols] for pdf in batches)], buf_cols)
+        ready, keep = keyed_state.split_at_watermark(
+            pend, [time_col, *tb], time_col, state.getCurrentWatermarkMs()
         )
-        if len(keep):
-            # Re-arm an event-time timer at the earliest pending row so the
-            # group is re-invoked when the watermark passes it — without
-            # this, a group that stops receiving data never flushes
-            # (Flink's over-window registers the same cleanup timer).
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
+        out = None
+        if len(ready):
+            vals = ready[value_col].astype(float).to_numpy()
+            cs = np.cumsum(vals)
+            out = pd.DataFrame(
+                {
+                    key: key_tuple[0],
+                    time_col: ready[time_col].to_numpy(),
+                    **{t: ready[t].to_numpy() for t in tb},
+                    value_col: vals,
+                    "running_sum": total + cs,
+                    "running_cnt": cnt + np.arange(1, len(vals) + 1, dtype="int64"),
+                }
             )
-            state.setTimeoutTimestamp(int(earliest) + 1)
+            total += float(cs[-1])
+            cnt += len(vals)
+
+        # wake when the watermark passes the earliest pending row, so a
+        # group that stops receiving data still flushes (Flink's
+        # over-window registers the same timer)
+        wake_ms = keyed_state.event_us(keep[time_col]).min() // 1000 + 1 if len(keep) else None
+        keyed_state.save(state, (keep, float(total), int(cnt)), wake_ms)
         if out is not None:
             yield out
 
-    return src.groupBy(key).applyInPandasWithState(
-        fn, out_schema, "buf binary, total double, cnt long", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state.apply(
+        src, [key], fn, out_schema, "buf binary, total double, cnt long"
     )
 
 
@@ -173,10 +145,7 @@ def count_window_agg(
     key_name, key_ddl = key_field.name, key_field.dataType.simpleString()
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            cnt, total, emitted = state.get
-        else:
-            cnt, total, emitted = 0, 0.0, 0
+        cnt, total, emitted = keyed_state.load(state, (0, 0.0, 0))
         parts = [pdf[value_col].astype(float).to_numpy() for pdf in batches]
         vals = np.concatenate(parts) if parts else np.empty(0)
         # count window == count trigger with FIRE_AND_PURGE: cursor is the
@@ -186,7 +155,7 @@ def count_window_agg(
             "count", window_size, True, None, acc, vals
         )
         n_fires = len(fires)
-        state.update((int(acc[0]), float(acc[1]), int(emitted) + n_fires))
+        keyed_state.save(state, (int(acc[0]), float(acc[1]), int(emitted) + n_fires))
         if n_fires:
             yield pd.DataFrame(
                 {
@@ -197,12 +166,11 @@ def count_window_agg(
                 }
             )
 
-    return df.groupBy(key).applyInPandasWithState(
-        fn,
+    return keyed_state.apply(
+        df, [key], fn,
         f"{key_name} {key_ddl}, window_seq int, cnt int, total double",
         "cnt int, total double, emitted int",
-        "append",
-        GroupStateTimeout.NoTimeout,
+        timeout="NoTimeout",
     )
 
 
@@ -289,8 +257,6 @@ def event_time_bounded_agg(
     """
     import numpy as np
 
-    from flink_1_8_sourcecode_spark.streaming import arrow_state
-
     if (preceding_rows is None) == (preceding_seconds is None):
         raise ValueError(
             "event_time_bounded_agg: exactly one of preceding_rows / "
@@ -322,138 +288,94 @@ def event_time_bounded_agg(
         f"{value_col} double, w_sum double, w_cnt long"
     )
     buf_cols = [time_col, *tb, value_col]
+    empty_buf = keyed_state.frame(src.schema, buf_cols)
 
     def fn(key_tuple, batches, state: GroupState):
-        if state.exists:
-            hist_blob, pend_blob, emitted = state.get
-            hist = arrow_state.de(bytes(hist_blob), buf_cols)
-            parts = [arrow_state.de(bytes(pend_blob), buf_cols)]
-        else:
-            hist, parts, emitted = arrow_state.concat([], buf_cols), [], 0
-        parts += [pdf[buf_cols] for pdf in batches]
-        pend = arrow_state.concat(parts, buf_cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
+        hist, pend, emitted = keyed_state.load(state, (empty_buf, empty_buf, 0))
+        pend = keyed_state.concat([pend, *(pdf[buf_cols] for pdf in batches)], buf_cols)
+        wm_ms = state.getCurrentWatermarkMs()
         # nothing buffered and nothing arrived => this firing can only
         # be an idle-cleanup timer (the emit timer is armed only when
         # pending rows exist)
         pure_cleanup = state.hasTimedOut and not len(pend)
 
-        keep = pend
+        ready, keep = keyed_state.split_at_watermark(
+            pend, [time_col, *tb], time_col, wm_ms
+        )
         out = None
-        if len(pend):
-            pend = pend.sort_values([time_col, *tb], kind="stable", ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
+        if len(ready):
+            # history rows all precede ready rows in event time (they
+            # were emitted behind an earlier watermark) — plain concat
+            # preserves the per-key event-time order
+            comb = keyed_state.concat([hist, ready.reset_index(drop=True)], buf_cols)
+            vals = comb[value_col].astype(float).to_numpy()
+            nh = len(hist)
+            nr = len(ready)
+            if preceding_rows is not None:
+                n = preceding_rows + 1  # frame size incl. current
+                w_sum = pd.Series(vals).rolling(n, min_periods=1).sum().to_numpy()[nh:]
+                # logical position counts rows PRUNED from history
+                pos = emitted + np.arange(1, nr + 1, dtype="int64")
+                w_cnt = np.minimum(pos, n)
+            else:
+                ts_all = keyed_state.event_us(comb[time_col])
+                cs = np.concatenate([[0.0], np.cumsum(vals)])
+                t_ready = ts_all[nh:]
+                lo = np.searchsorted(
+                    ts_all, t_ready - int(preceding_seconds * 1e6), side="left"
+                )
+                # peer-inclusive upper bound (SQL RANGE CURRENT ROW)
+                hi = np.searchsorted(ts_all, t_ready, side="right")
+                w_sum = cs[hi] - cs[lo]
+                w_cnt = (hi - lo).astype("int64")
+            out = pd.DataFrame(
+                {
+                    key: key_tuple[0],
+                    time_col: ready[time_col].to_numpy(),
+                    **{t: ready[t].to_numpy() for t in tb},
+                    value_col: ready[value_col].astype(float).to_numpy(),
+                    "w_sum": w_sum,
+                    "w_cnt": w_cnt,
+                }
             )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
-            if len(ready):
-                # history rows all precede ready rows in event time
-                # (they were emitted behind an earlier watermark) —
-                # plain concat preserves the per-key event-time order
-                comb = arrow_state.concat(
-                    [hist, ready.reset_index(drop=True)], buf_cols
-                )
-                vals = comb[value_col].astype(float).to_numpy()
-                nh = len(hist)
-                nr = len(ready)
-                if preceding_rows is not None:
-                    n = preceding_rows + 1  # frame size incl. current
-                    roll = (
-                        pd.Series(vals).rolling(n, min_periods=1).sum().to_numpy()
-                    )
-                    w_sum = roll[nh:]
-                    # logical position counts rows PRUNED from history
-                    pos = emitted + np.arange(1, nr + 1, dtype="int64")
-                    w_cnt = np.minimum(pos, n)
-                else:
-                    ts_all = (
-                        comb[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-                    )
-                    cs = np.concatenate([[0.0], np.cumsum(vals)])
-                    t_ready = ts_all[nh:]
-                    lo = np.searchsorted(
-                        ts_all, t_ready - int(preceding_seconds * 1e6), side="left"
-                    )
-                    # peer-inclusive upper bound (SQL RANGE CURRENT ROW)
-                    hi = np.searchsorted(ts_all, t_ready, side="right")
-                    w_sum = cs[hi] - cs[lo]
-                    w_cnt = (hi - lo).astype("int64")
-                out = pd.DataFrame(
-                    {
-                        key: key_tuple[0],
-                        time_col: ready[time_col].to_numpy(),
-                        **{t: ready[t].to_numpy() for t in tb},
-                        value_col: ready[value_col].astype(float).to_numpy(),
-                        "w_sum": w_sum,
-                        "w_cnt": w_cnt,
-                    }
-                )
-                emitted += nr
-                # retain exactly the frame-reachable tail
-                if preceding_rows is not None:
-                    hist = comb.iloc[len(comb) - min(len(comb), preceding_rows):]
-                else:
-                    ts_all_us = (
-                        comb[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-                    )
-                    cut = int((wm - preceding_seconds) * 1e6)
-                    hist = comb[ts_all_us > cut]
+            emitted += nr
+            # retain exactly the frame-reachable tail (RANGE: pruned below)
+            if preceding_rows is not None:
+                hist = comb.iloc[len(comb) - min(len(comb), preceding_rows):]
+            else:
+                hist = comb
 
-        # idle-state cleanup: RANGE history older than wm - preceding
-        # can never reach a future frame (future rows have ts > wm) —
-        # prune it even on timeout-only firings with no ready rows
+        # RANGE history older than wm - preceding can never reach a
+        # future frame (future rows have ts > wm) — prune it even on
+        # timeout-only firings with no ready rows
         if preceding_seconds is not None and len(hist):
-            ts_h = (
-                hist[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-            )
-            hist = hist[ts_h > int((wm - preceding_seconds) * 1e6)]
+            cut = int((wm_ms / 1000.0 - preceding_seconds) * 1e6)
+            hist = hist[keyed_state.event_us(hist[time_col]) > cut]
         rows_idle_drop = (
             preceding_rows is not None
             and idle_retention_seconds is not None
             and pure_cleanup
         )
         if (not len(keep) and not len(hist)) or rows_idle_drop:
-            if state.exists:
-                state.remove()
-            if out is not None:
-                yield out
-            return
-        state.update(
-            (
-                arrow_state.ser(hist.reset_index(drop=True)),
-                arrow_state.ser(keep.reset_index(drop=True)),
-                int(emitted),
-            )
-        )
-        wm_ms = state.getCurrentWatermarkMs()
-        if len(keep):
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
-            )
-            state.setTimeoutTimestamp(max(int(earliest) + 1, wm_ms + 1))
-        elif preceding_seconds is not None:
-            # RANGE: fire exactly when the retained tail goes dead
-            hmax_ms = (
-                hist[time_col].astype("datetime64[us]").astype("int64").max() / 1e3
-            )
-            state.setTimeoutTimestamp(
-                max(int(hmax_ms + preceding_seconds * 1e3) + 1, wm_ms + 1)
-            )
-        elif idle_retention_seconds is not None:
-            # ROWS + configured retention: drop the key after idling
-            state.setTimeoutTimestamp(
-                wm_ms + int(idle_retention_seconds * 1e3) + 1
-            )
+            keyed_state.save(state, None)
+        else:
+            if len(keep):
+                wake_ms = keyed_state.event_us(keep[time_col]).min() // 1000 + 1
+            elif preceding_seconds is not None:
+                # RANGE: fire exactly when the retained tail goes dead
+                hmax_ms = keyed_state.event_us(hist[time_col]).max() / 1e3
+                wake_ms = int(hmax_ms + preceding_seconds * 1e3) + 1
+            elif idle_retention_seconds is not None:
+                # ROWS + configured retention: drop the key after idling
+                wake_ms = wm_ms + int(idle_retention_seconds * 1e3) + 1
+            else:
+                wake_ms = None
+            keyed_state.save(state, (hist, keep, int(emitted)), wake_ms)
         if out is not None:
             yield out
 
-    return src.groupBy(key).applyInPandasWithState(
-        fn,
-        out_schema,
-        "hist binary, pend binary, emitted long",
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state.apply(
+        src, [key], fn, out_schema, "hist binary, pend binary, emitted long"
     )
 
 
@@ -474,12 +396,9 @@ def event_time_sorted_emit(
     streaming SQL ORDER BY ts requires); with a key, rows are ordered
     per key but parallel across keys.  Output schema = input schema.
 
-    Scale notes: the buffer rides as an Arrow-IPC blob of the full row
-    schema (typed, no pickle); per batch the work is one stable sort
-    plus a boolean watermark split — no per-row Python.
+    Per batch the work is one stable sort plus a watermark split — no
+    per-row Python.
     """
-    from flink_1_8_sourcecode_spark.streaming import arrow_state
-
     src = df.withWatermark(time_col, watermark_delay)
     if key is None:
         # total order: one group (the reference's parallelism-1 sort)
@@ -489,38 +408,21 @@ def event_time_sorted_emit(
         group = [key]
     cols = df.columns
     out_schema = ", ".join(f"{c} {src.schema[c].dataType.simpleString()}" for c in cols)
+    empty = (keyed_state.frame(src.schema, cols),)
+    sort_cols = [time_col, *([tiebreak] if tiebreak else [])]
 
     def fn(key_tuple, batches, state: GroupState):
-        parts = [arrow_state.de(bytes(state.get[0]), cols)] if state.exists else []
-        parts += [pdf[cols] for pdf in batches]
-        pend = arrow_state.concat(parts, cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
-
-        ready, keep = None, pend
-        if len(pend):
-            sort_cols = [time_col, *( [tiebreak] if tiebreak else [] )]
-            pend = pend.sort_values(sort_cols, kind="stable", ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-            )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
-
-        state.update((arrow_state.ser(keep.reset_index(drop=True)),))
-        if len(keep):
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
-            )
-            state.setTimeoutTimestamp(
-                max(int(earliest) + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if ready is not None and len(ready):
+        (buf,) = keyed_state.load(state, empty)
+        pend = keyed_state.concat([buf, *(pdf[cols] for pdf in batches)], cols)
+        ready, keep = keyed_state.split_at_watermark(
+            pend, sort_cols, time_col, state.getCurrentWatermarkMs()
+        )
+        wake_ms = keyed_state.event_us(keep[time_col]).min() // 1000 + 1 if len(keep) else None
+        keyed_state.save(state, (keep,), wake_ms)
+        if len(ready):
             yield ready
 
-    grouped = src.groupBy(*group)
-    return grouped.applyInPandasWithState(
-        fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return keyed_state.apply(src, group, fn, out_schema, "buf binary")
 
 
 def streaming_heavy_hitters(
@@ -550,20 +452,12 @@ def streaming_heavy_hitters(
     """
     import numpy as np
 
-    src = df.select(
-        F.col(item_col).cast("string").alias("__item"),
-        F.pmod(F.xxhash64(F.col(item_col).cast("string")), F.lit(key_buckets)).alias(
-            "__kg"
-        ),
-    )
+    src = df.select(F.col(item_col).cast("string").alias("__item"))
     cap = int(k_capacity)
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            items, counts, seen = state.get
-            counters = pd.Series(list(counts), index=list(items), dtype="float64")
-        else:
-            counters, seen = pd.Series(dtype="float64"), 0
+        items, counts, seen = keyed_state.load(state, ([], [], 0))
+        counters = pd.Series(list(counts), index=list(items), dtype="float64")
         for pdf in batches:
             vc = pdf["__item"].value_counts()
             seen += int(vc.sum())
@@ -574,7 +468,7 @@ def streaming_heavy_hitters(
                 kth = counters.nlargest(cap + 1).iloc[-1]
                 counters = counters - kth
                 counters = counters[counters > 0]
-        state.update((
+        keyed_state.save(state, (
             [str(i) for i in counters.index],
             [int(c) for c in counters.to_numpy()],
             int(seen),
@@ -588,12 +482,11 @@ def streaming_heavy_hitters(
                 }
             )
 
-    return src.groupBy("__kg").applyInPandasWithState(
-        fn,
+    return keyed_state.apply(
+        src, ["__item"], fn,
         "item string, lower_count long, bucket_seen long",
         "items array<string>, counts array<long>, n_seen long",
-        "update",
-        GroupStateTimeout.NoTimeout,
+        key_buckets, mode="update", timeout="NoTimeout",
     )
 
 
@@ -674,14 +567,11 @@ def streaming_lsh_dedup(
     )
     rows = df.select(
         F.col(id_col).cast("long").alias("__id"), F.explode(band_arr).alias("__band")
-    ).withColumn("__kg", F.pmod(F.xxhash64("__band"), F.lit(key_buckets)))
+    )
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            keys, owners = state.get
-            store = dict(zip(keys, owners))
-        else:
-            store = {}
+        keys, owners = keyed_state.load(state, ([], []))
+        store = dict(zip(keys, owners))
         parts = [pdf[["__id", "__band"]] for pdf in batches]
         if not parts:
             return
@@ -698,7 +588,7 @@ def streaming_lsh_dedup(
         for band, own in batch_min.items():
             if band not in store:
                 store[band] = int(own)
-        state.update((list(store.keys()), [int(v) for v in store.values()]))
+        keyed_state.save(state, (list(store.keys()), [int(v) for v in store.values()]))
         if len(dup):
             out = (
                 dup.groupby("__id", as_index=False)["__owner"]
@@ -708,14 +598,12 @@ def streaming_lsh_dedup(
             out["dup_of"] = out["dup_of"].astype("int64")
             yield out
 
-    matches = rows.groupBy("__kg").applyInPandasWithState(
-        fn,
+    return keyed_state.apply(
+        rows, ["__band"], fn,
         "doc_id long, dup_of long",
         "keys array<string>, owners array<long>",
-        "append",
-        GroupStateTimeout.NoTimeout,
+        key_buckets, timeout="NoTimeout",
     )
-    return matches
 
 
 def streaming_rate_limit(
@@ -735,8 +623,8 @@ def streaming_rate_limit(
     batch operator's on the same data — the property that makes
     backfills reproduce the online throttle.
 
-    State per key = the pending buffer (Arrow blob) plus one
-    (bucket, admitted) counter row per OPEN bucket — buckets the
+    State per key = the pending row buffer plus one (bucket, admitted)
+    counter row per OPEN bucket — buckets the
     watermark has closed are pruned, so state is bounded by
     disorder/window, never the stream.  Per batch: one stable sort, a
     watermark split, and a vectorized per-bucket cumcount.
@@ -745,8 +633,6 @@ def streaming_rate_limit(
     """
     import numpy as np
 
-    from flink_1_8_sourcecode_spark.streaming import arrow_state
-
     if k <= 0 or window_seconds <= 0:
         raise ValueError("k and window_seconds must be positive")
     src = df.withWatermark(time_col, watermark_delay)
@@ -754,91 +640,62 @@ def streaming_rate_limit(
     out_schema = ", ".join(
         f"{c} {src.schema[c].dataType.simpleString()}" for c in cols
     ) + ", window_start long"
+    empty = (keyed_state.frame(src.schema, cols), keyed_state.packed(1))
 
     def fn(key_tuple, batches, state: GroupState):
-        if state.exists:
-            pend_blob, cnt_blob = state.get
-            pend_parts = [arrow_state.de(bytes(pend_blob), cols)]
-            cnts = arrow_state.unpack_f64(bytes(cnt_blob), 2)
-        else:
-            pend_parts, cnts = [], np.zeros((0, 2))
-        pend_parts += [pdf[cols] for pdf in batches]
-        pend = arrow_state.concat(pend_parts, cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
+        buf, cnts = keyed_state.load(state, empty)
+        pend = keyed_state.concat([buf, *(pdf[cols] for pdf in batches)], cols)
+        wm_ms = state.getCurrentWatermarkMs()
+        wm = wm_ms / 1000.0
 
-        keep = pend
         out = None
-        counts = {int(b): int(c) for b, c in cnts}
-        if len(pend):
-            pend = pend.sort_values([time_col, id_col], kind="stable",
-                                    ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-                / 1e6
-            )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
-            if len(ready):
-                bkt = (
-                    (tsec[ready_mask] // window_seconds).astype("int64")
-                    * window_seconds
+        counts = {int(b): int(c) for b, c in zip(cnts.keys, cnts.vals[:, 0])}
+        ready, keep = keyed_state.split_at_watermark(
+            pend, [time_col, id_col], time_col, wm_ms
+        )
+        if len(ready):
+            tsec = keyed_state.event_us(ready[time_col]) / 1e6
+            bkt = (tsec // window_seconds).astype("int64") * window_seconds
+            prior = np.array([counts.get(int(b), 0) for b in bkt])
+            within = pd.Series(1, index=range(len(bkt))).groupby(
+                bkt, sort=False
+            ).cumsum().to_numpy() - 1
+            rank = prior + within
+            admit = rank < k
+            if admit.any():
+                out = ready[admit].copy()
+                out["window_start"] = bkt[admit]
+            # roll the admitted totals into the bucket counters
+            for b in np.unique(bkt):
+                m = bkt == b
+                counts[int(b)] = min(
+                    k, counts.get(int(b), 0) + int(m.sum())
                 )
-                prior = np.array([counts.get(int(b), 0) for b in bkt])
-                within = pd.Series(1, index=range(len(bkt))).groupby(
-                    bkt, sort=False
-                ).cumsum().to_numpy() - 1
-                rank = prior + within
-                admit = rank < k
-                if admit.any():
-                    out = ready[admit].copy()
-                    out["window_start"] = bkt[admit]
-                # roll the admitted totals into the bucket counters
-                for b in np.unique(bkt):
-                    m = bkt == b
-                    counts[int(b)] = min(
-                        k, counts.get(int(b), 0) + int(m.sum())
-                    )
         # prune buckets the watermark has closed (no row of that bucket
         # can still arrive: its latest time < bucket end <= wm)
-        counts = {
-            b: c for b, c in counts.items() if b + window_seconds > wm
-        }
+        counts = dict(sorted(
+            (b, c) for b, c in counts.items() if b + window_seconds > wm
+        ))
         # idle-key cleanup (reference: cleanup timers on keyed state):
         # with nothing pending and no open bucket, the key holds no
-        # information — drop it; with open buckets but no pending rows,
-        # fire exactly when the last open bucket closes so the counters
-        # get pruned and the state removed, instead of living forever
-        if not len(keep) and not counts:
-            if state.exists:
-                state.remove()
-            if out is not None and len(out):
-                yield out
-            return
-        cnt_arr = np.array(
-            [[float(b), float(c)] for b, c in sorted(counts.items())]
-        ) if counts else np.zeros((0, 2))
-        state.update(
-            (
-                arrow_state.ser(keep.reset_index(drop=True)),
-                arrow_state.pack_f64(cnt_arr),
-            )
-        )
-        wm_ms = state.getCurrentWatermarkMs()
+        # information and is dropped; with open buckets but no pending
+        # rows, fire exactly when the last open bucket closes so the
+        # counters get pruned and the state removed
         if len(keep):
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
-            )
-            state.setTimeoutTimestamp(max(int(earliest) + 1, wm_ms + 1))
+            wake_ms = keyed_state.event_us(keep[time_col]).min() // 1000 + 1
+        elif counts:
+            wake_ms = int(max(b + window_seconds for b in counts) * 1e3) + 1
         else:
-            last_close = max(b + window_seconds for b in counts)
-            state.setTimeoutTimestamp(max(int(last_close * 1e3) + 1, wm_ms + 1))
+            wake_ms = None
+        cnts = keyed_state.Packed(
+            np.array(list(counts), dtype=np.int64),
+            np.array(list(counts.values()), dtype=np.float64).reshape(-1, 1),
+        )
+        keyed_state.save(state, (keep, cnts), wake_ms)
         if out is not None and len(out):
             yield out
 
-    return src.groupBy(key).applyInPandasWithState(
-        fn, out_schema, "pend binary, cnts binary", "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return keyed_state.apply(src, [key], fn, out_schema, "pend binary, cnts binary")
 
 
 def streaming_kmv_sketch(
@@ -878,16 +735,13 @@ def streaming_kmv_sketch(
     space = float(1 << 28)
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            mins, seen = list(state.get[0]), int(state.get[1])
-        else:
-            mins, seen = [], 0
-        s = set(mins)
+        mins, seen = keyed_state.load(state, ([], 0))
+        s, seen = set(mins), int(seen)
         for pdf in batches:
             seen += len(pdf)
             s.update(int(h) for h in pdf["__hv"].unique())
         mins = sorted(s)[:k]
-        state.update((mins, seen))
+        keyed_state.save(state, (mins, seen))
         est = float(len(mins)) if len(mins) < k else (k - 1) * space / mins[k - 1]
         yield pd.DataFrame(
             {
@@ -898,12 +752,11 @@ def streaming_kmv_sketch(
             }
         )
 
-    out = src.groupBy("__g").applyInPandasWithState(
-        fn,
+    out = keyed_state.apply(
+        src, ["__g"], fn,
         f"__g {gtype}, n_seen long, kmv_size int, est_distinct double",
         "mins array<long>, n_seen long",
-        "update",
-        GroupStateTimeout.NoTimeout,
+        mode="update", timeout="NoTimeout",
     )
     return out.withColumnRenamed("__g", group_col)
 
@@ -950,22 +803,17 @@ def streaming_uniform_sample(
     gtype = src.schema["__g"].dataType.simpleString()
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            hs, ids, seen = (
-                list(state.get[0]), list(state.get[1]), int(state.get[2])
-            )
-        else:
-            hs, ids, seen = [], [], 0
+        hs, ids, seen = keyed_state.load(state, ([], [], 0))
         pairs = dict(zip(hs, ids))
         fold_hashes: set = set()
         for pdf in batches:
             fold_hashes.update(pdf["__hv"])
             pairs.update(zip(pdf["__hv"], pdf["__id"]))
-        seen += len(fold_hashes)
+        seen = int(seen) + len(fold_hashes)
         best = sorted(pairs.items())[:k]
         hs = [h for h, _ in best]
         ids = [str(i) for _, i in best]
-        state.update((hs, ids, seen))
+        keyed_state.save(state, (hs, ids, seen))
         yield pd.DataFrame(
             {
                 "__g": [key_tuple[0]],
@@ -974,12 +822,11 @@ def streaming_uniform_sample(
             }
         )
 
-    out = src.groupBy("__g").applyInPandasWithState(
-        fn,
+    out = keyed_state.apply(
+        src, ["__g"], fn,
         f"__g {gtype}, n_seen long, sample_ids array<string>",
         "hs array<string>, ids array<string>, n_seen long",
-        "update",
-        GroupStateTimeout.NoTimeout,
+        mode="update", timeout="NoTimeout",
     )
     return out.withColumnRenamed("__g", group_col).withColumn(
         "sample_ids", F.col("sample_ids").cast(f"array<{idtype}>")

@@ -17,17 +17,17 @@ Scale notes:
   hash into a fixed number of key groups
   (flink-runtime/.../state/KeyGroupRangeAssignment.java, default
   maxParallelism 128) and each task owns a key-group range.
-  ``key_buckets`` is the same design here: the stateful shuffle is on
-  ``hash(key) % key_buckets``, one applyInPandasWithState invocation
-  per bucket per micro-batch, and per-(key, window) accumulators live
-  inside the bucket's state.  This amortizes the per-invocation
+  ``key_buckets`` is the same design here (``keyed_state.key_groups``):
+  the stateful shuffle is on ``hash(key) % key_buckets``, one
+  invocation per bucket per micro-batch, and per-(key, window)
+  accumulators live inside the bucket's state.  This amortizes the per-invocation
   JVM<->Python protocol cost over all keys of the bucket — at high key
   cardinality the per-key-invocation alternative is the scale-killer,
   not the arithmetic.  Size ``key_buckets`` like Flink's
   maxParallelism: >= the executor-core count you want to saturate.
-- **State.** Per bucket, one packed float64 matrix of
-  (key, w_start, cnt, total, cursor) open-window accumulators (typed,
-  no pickle; see ``arrow_state.pack_f64``), never buffered rows.
+- **State.** Per bucket, one ``keyed_state.Packed`` matrix of open-window
+  accumulators: the exact int64 key plus float64 (w_start, cnt, total,
+  cursor), never buffered rows.
 - **Vectorization.** Per-batch work is numpy: count-trigger firings
   fall out of modular arithmetic on cumulative counts,
   continuous-trigger firings out of boundary crossings, and emitted
@@ -46,11 +46,10 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-from flink_1_8_sourcecode_spark.streaming import arrow_state
+from flink_1_8_sourcecode_spark.streaming import keyed_state
 
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
@@ -209,9 +208,8 @@ def triggered_tumble_agg(
         delta_fn = lambda last, cur: abs(cur - last)  # noqa: E731
     key_field = df.schema[key]
     key_name, key_ddl = key_field.name, key_field.dataType.simpleString()
-    numeric_key = isinstance(key_field.dataType, _INTEGRAL)
     bucketed = key_buckets is not None
-    if bucketed and not numeric_key:
+    if bucketed and not isinstance(key_field.dataType, _INTEGRAL):
         raise ValueError(
             f"key_buckets requires an integral key column; {key_name} is {key_ddl}"
         )
@@ -221,21 +219,21 @@ def triggered_tumble_agg(
 
     def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
         # wins: (u, ws) -> [cnt, total, cursor]; cursor NaN = DeltaTrigger's
-        # empty ValueState.  u is the key value (0.0 when the invocation
-        # is already per-key and the key is non-numeric).  State rides as
-        # a packed (n, 5) float64 matrix — typed, no pickle.
-        wins: dict[tuple[float, float], list] = {}
-        if state.exists:
-            for u, w, c, t, cu in arrow_state.unpack_f64(state.get[0], 5):
-                wins[(float(u), float(w))] = [int(c), float(t), float(cu)]
+        # empty ValueState.  u is the int64 key value on the key-group
+        # path, 0 when the invocation is already per key.
+        (st,) = keyed_state.load(state, (keyed_state.packed(4),))
+        wins: dict[tuple[int, float], list] = {
+            (int(u), float(w)): [int(c), float(t), float(cu)]
+            for u, (w, c, t, cu) in zip(st.keys, st.vals)
+        }
         wm = state.getCurrentWatermarkMs() / 1000.0  # global event-time watermark
-        out_u: list[float] = []
+        out_u: list[int] = []
         out_ws: list[float] = []
         out_cnt: list[int] = []
         out_total: list[float] = []
         out_final: list[bool] = []
 
-        def emit(u: float, ws: float, cnt: int, total: float, final: bool) -> None:
+        def emit(u: int, ws: float, cnt: int, total: float, final: bool) -> None:
             out_u.append(u)
             out_ws.append(ws)
             out_cnt.append(int(cnt))
@@ -244,14 +242,12 @@ def triggered_tumble_agg(
 
         u_parts, ts_parts, val_parts = [], [], []
         for pdf in batches:
-            ts_parts.append(
-                pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-            )
+            ts_parts.append(keyed_state.event_us(pdf[time_col]) / 1e6)
             val_parts.append(pdf[value_col].astype(float).to_numpy())
-            if numeric_key:
-                u_parts.append(pdf[key_name].to_numpy().astype(np.float64))
+            if bucketed:
+                u_parts.append(pdf[key_name].to_numpy().astype(np.int64))
             else:
-                u_parts.append(np.zeros(len(pdf)))
+                u_parts.append(np.zeros(len(pdf), dtype=np.int64))
         ts = np.concatenate(ts_parts) if ts_parts else np.empty(0)
         if len(ts):
             vals = np.concatenate(val_parts)
@@ -271,7 +267,7 @@ def triggered_tumble_agg(
             ends = np.concatenate((starts[1:], [len(us)]))
 
             for s, e in zip(starts, ends):
-                u, w = float(us[s]), float(ws_all[s])
+                u, w = int(us[s]), float(ws_all[s])
                 wvals = vals[s:e]
                 acc = wins.get((u, w))
                 if acc is None:
@@ -307,27 +303,19 @@ def triggered_tumble_agg(
                 emit(u, w, acc[0], acc[1], final=True)
                 del wins[(u, w)]
 
-        if wins:
-            st_new = np.array(
-                [[u, w, a[0], a[1], a[2]] for (u, w), a in wins.items()],
-                dtype=np.float64,
-            )
-            state.update((arrow_state.pack_f64(st_new),))
-            # event-time timer at the earliest pending deadline (next
-            # window end or continuous boundary), like Flink's
-            # registerEventTimeTimer — must sit beyond the watermark
-            deadlines = [w + window_seconds for (_u, w) in wins]
-            if kind == "continuous":
-                deadlines += [a[2] for a in wins.values()]
-            target_ms = int(min(deadlines) * 1000)
-            state.setTimeoutTimestamp(max(target_ms, int(wm * 1000) + 1))
-        elif state.exists:
-            # no open windows: drop the key's state entry entirely so
-            # state stays bounded by ACTIVE keys, not all keys ever seen
-            state.remove()
+        # event-time timer at the earliest pending deadline (next window
+        # end or continuous boundary), like Flink's registerEventTimeTimer
+        deadlines = [w + window_seconds for (_u, w) in wins]
+        if kind == "continuous":
+            deadlines += [a[2] for a in wins.values()]
+        st = keyed_state.Packed(
+            np.array([u for u, _w in wins], dtype=np.int64),
+            np.array([[w, *a] for (_u, w), a in wins.items()], dtype=np.float64).reshape(-1, 4),
+        )
+        keyed_state.save(state, (st,), int(min(deadlines) * 1000) if wins else None)
         if out_ws:
             if bucketed:
-                key_col = np.array(out_u).astype(np.int64)
+                key_col = np.array(out_u, dtype=np.int64)
             else:
                 key_col = key_tuple[0]  # invocation is per key
             yield pd.DataFrame(
@@ -340,13 +328,7 @@ def triggered_tumble_agg(
                 }
             )
 
-    src = df.withWatermark(time_col, watermark_delay)
-    if bucketed:
-        grouped = src.withColumn(
-            "__kg", F.pmod(F.xxhash64(F.col(key)), F.lit(key_buckets))
-        ).groupBy("__kg")
-    else:
-        grouped = src.groupBy(key)
-    return grouped.applyInPandasWithState(
-        fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
+    return keyed_state.apply(
+        df.withWatermark(time_col, watermark_delay), [key], fn, out_schema,
+        "buf binary", key_buckets,
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from flink_1_8_sourcecode_spark.catalog import table
@@ -237,8 +238,8 @@ def test_count_trigger_bucketed_key_groups_same_result(spark, tmp_path):
 
 
 def test_key_buckets_rejects_non_integral_key(spark):
-    """The key-group path packs key values into float64 state — only
-    integral keys are exact, others must be rejected loudly."""
+    """The key-group path carries key values in packed int64 state —
+    non-integral keys must be rejected loudly."""
     import pytest
 
     stream = sources.rate_stream(spark).withColumn("k", F.lit("x"))
@@ -373,3 +374,43 @@ def test_evictor_bucketed_key_groups_same_result(spark, tmp_path):
         ).reset_index(drop=True)
         outs.append(pdf)
     assert_frames_match(outs[0], outs[1], name="evictor_key_groups")
+
+
+@pytest.mark.parametrize("op", ["trigger", "evictor"])
+def test_key_buckets_keep_long_keys_exact(spark, tmp_path, op):
+    """Keys at or above 2**53 are not exact in float64
+    (float64(2**53 + 1) == float64(2**53)); on the key-group path two
+    such users must still get separate windows under their own keys."""
+    from flink_1_8_sourcecode_spark.streaming.evictors import evicted_tumble_agg
+
+    big = 2**53
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (i, base + dt.timedelta(hours=i), big + (i % 2), "click", float(i + 1), "{}")
+        for i in range(6)
+    ]
+    rows.append((10**9, base + dt.timedelta(days=30), -1, "noop", 0.0, "{}"))
+    chunks = str(tmp_path / f"long_keys_{op}")
+    spark.createDataFrame(rows, sources.EVENTS_SCHEMA).coalesce(1).write.parquet(
+        chunks + "/__chunk=00"
+    )
+    stream = sources.read_event_stream(spark, chunks)
+    common = dict(
+        key="user_id", time_col="ts", value_col="value", window_seconds=WINDOW_S,
+        key_buckets=1,
+    )
+    if op == "trigger":
+        out = triggered_tumble_agg(stream, trigger=("count", 100), **common)
+    else:
+        out = evicted_tumble_agg(stream, evictor=("count", 100), **common)
+    name = f"t_long_keys_{op}"
+    q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = spark.table(name).toPandas()
+    got = got[got.user_id >= 0].sort_values("user_id")
+    assert got.user_id.tolist() == [big, big + 1]
+    assert got.cnt.tolist() == [3, 3]
+    assert got.total.tolist() == [1.0 + 3.0 + 5.0, 2.0 + 4.0 + 6.0]
